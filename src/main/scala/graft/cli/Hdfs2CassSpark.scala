@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.{CassandraParams, ClusterInfo, StaticClusterInfo}
 import graft.operators.CqlPipeline
 import graft.operators.CqlPipeline.Projection
-import graft.sinks.{BulkSink, LoaderPlan, StreamLoader}
+import graft.sinks.{BulkSink, InProcessCluster, LoaderPlan, StreamLoader}
 import graft.sources.AvroSource
 
 /**
@@ -132,17 +132,9 @@ object Hdfs2CassSpark {
         s"unknown target scheme '$other' (use cql:// or thrift://)")
     }
     {
-      // distributerandomly changes only the row->partition routing: the
-      // reference keeps the within-reducer decorated-key sort either way
-      // (CassandraPartitioner.java:58-60 + CassandraParams.java:291-293),
-      // so both modes emit the same sorted-run format — random runs just
-      // span the full token range and stream to all replicas
-      val wantSalt = params.saltAuto || params.saltBuckets.nonEmpty
-      require(!wantSalt || (!params.distributeRandomly &&
-        info.partitionerClass == graft.core.CassandraParams.Murmur3Partitioner),
-        "saltbuckets= needs the Murmur3 partitioner and no " +
-          "distributerandomly — salting IS the ring-preserving alternative " +
-          "to distributerandomly")
+      // fail before the sample pass, not after it
+      if (params.saltAuto || params.saltBuckets.nonEmpty)
+        BulkSink.requireSaltable(info.partitionerClass, params.distributeRandomly)
       // auto mode adds a sample pass over the projected input (sampling
       // still READS every row), so the frame materializes once and both
       // the salt plan and the write consume the checkpoint — not two
@@ -153,16 +145,10 @@ object Hdfs2CassSpark {
         if (params.saltAuto)
           BulkSink.planSalts(toWrite, Seq("rowkey"), params.reducers)
         else params.saltBuckets
-      val manifests =
-        if (wantSalt && salts.nonEmpty)
-          BulkSink.writeSortedSalted(toWrite, Seq("rowkey"),
-            params.reducers, args.sinkDir, salts,
-            compression = params.compressionClass)
-        else
-          BulkSink.writeSorted(toWrite, Seq("rowkey"), params.reducers, args.sinkDir,
-            partitionerClass = info.partitionerClass,
-            compression = params.compressionClass,
-            distributeRandomly = params.distributeRandomly)
+      val manifests = BulkSink.write(toWrite, Seq("rowkey"), params.reducers,
+        args.sinkDir, salts, partitionerClass = info.partitionerClass,
+        compression = params.compressionClass,
+        distributeRandomly = params.distributeRandomly)
       // with ring metadata present, also emit the stream plan the loader
       // would execute (file -> replica endpoints). Compressed runs plan
       // and stream like any other since chunked compression landed: the
@@ -192,12 +178,7 @@ object Hdfs2CassSpark {
             Console.err.println(s"[graft] rf=$declaredRf exceeds " +
               s"${nodes.length} ring nodes; planning streams at rf=$rf")
           val plan = LoaderPlan.planStreams(manifests, nodes, rf = rf)
-          val json = plan.map { case (f, hosts) =>
-            s""""$f": [${hosts.toSeq.sorted.map("\"" + _ + "\"").mkString(", ")}]"""
-          }.mkString("{", ", ", "}")
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(args.sinkDir, "_STREAM_PLAN.json"),
-            json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          InProcessCluster.writePlanJson(args.sinkDir, plan)
           Some(plan)
         case s: StaticClusterInfo if s.ring.nonEmpty =>
           // metadata was supplied but carries no Long token ring

@@ -3,6 +3,9 @@ package graft.core
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.types._
+
 /**
  * Serialization of column values to Cassandra wire bytes — the rebuild of the
  * reference's polymorphic value -> ByteBuffer kernel. Semantics studied from
@@ -25,6 +28,8 @@ import java.nio.charset.StandardCharsets
  *
  * Kept OUT of the query plan until the sink or an explicit serialization
  * expression — values stay typed (Tungsten-friendly) as long as possible.
+ * Both bulk sinks encode rows through [[RowCodec]], straight from
+ * Catalyst's internal values.
  */
 object CqlValueCodec {
 
@@ -117,6 +122,79 @@ object CqlValueCodec {
   def partitionKey(values: IndexedSeq[Array[Byte]], keyIndexes: Array[Int]): Array[Byte] = {
     if (keyIndexes.length == 1) values(keyIndexes(0))
     else composite(keyIndexes.map(values(_)))
+  }
+
+  /** Wire serializer of the value at one ordinal of a Catalyst row, array
+    * or map side (all three are [[SpecializedGetters]]). */
+  type FieldSerializer = (SpecializedGetters, Int) => Array[Byte]
+
+  /**
+   * Null-aware wire serializer for Catalyst type `dt` (null -> [[Empty]]).
+   * Timestamps go from Catalyst micros to CQL millis by FLOOR division, so
+   * a pre-epoch sub-millisecond instant lands on the millisecond before
+   * it (-1 us -> -1 ms), like `java.sql.Timestamp.getTime`. Dates are
+   * epoch days; collections, maps and structs recurse element-wise.
+   */
+  def serializer(dt: DataType): FieldSerializer = {
+    val nonNull: FieldSerializer = dt match {
+      case StringType  => (r, i) => serializeString(r.getUTF8String(i).toString)
+      case LongType    => (r, i) => serializeLong(r.getLong(i))
+      case IntegerType => (r, i) => serializeInt(r.getInt(i))
+      case ShortType   => (r, i) => serializeShort(r.getShort(i))
+      case DoubleType  => (r, i) => serializeDouble(r.getDouble(i))
+      case FloatType   => (r, i) => serializeFloat(r.getFloat(i))
+      case BooleanType => (r, i) => serializeBoolean(r.getBoolean(i))
+      case BinaryType  => (r, i) => r.getBinary(i)
+      case TimestampType | TimestampNTZType =>
+        (r, i) => serializeLong(Math.floorDiv(r.getLong(i), 1000L))
+      case DateType    => (r, i) => serializeInt(r.getInt(i))
+      case d: DecimalType =>
+        (r, i) => serializeDecimal(r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal)
+      case ArrayType(et, _) =>
+        val el = serializer(et)
+        (r, i) => {
+          val a = r.getArray(i)
+          serializeCollection(Array.tabulate(a.numElements())(el(a, _)))
+        }
+      case MapType(kt, vt, _) =>
+        val (ks, vs) = (serializer(kt), serializer(vt))
+        (r, i) => {
+          val m = r.getMap(i)
+          val (k, v) = (m.keyArray(), m.valueArray())
+          serializeMap(Array.tabulate(m.numElements())(j => (ks(k, j), vs(v, j))))
+        }
+      case st: StructType =>
+        val fs = st.fields.map(f => serializer(f.dataType))
+        (r, i) => {
+          val s = r.getStruct(i, fs.length)
+          composite(Array.tabulate(fs.length)(j => fs(j)(s, j)))
+        }
+      case other => throw new IllegalArgumentException(
+        s"cannot serialize type $other to Cassandra wire bytes")
+    }
+    (r, i) => if (r.isNullAt(i)) Empty else nonNull(r, i)
+  }
+
+  /** Value payload of the run format: a 4-byte BE length, then the bytes,
+    * per field. */
+  def frame(parts: Array[Array[Byte]]): Array[Byte] = {
+    var total = 0
+    parts.foreach(p => total += 4 + p.length)
+    val bb = ByteBuffer.allocate(total)
+    parts.foreach(p => bb.putInt(p.length).put(p))
+    bb.array()
+  }
+
+  /** The bulk sinks' row codec: serializes columns `cols` of `schema`'s
+    * rows, read straight from Catalyst's internal values. */
+  final class RowCodec(schema: StructType, cols: Array[Int]) extends Serializable {
+    private val serializers = cols.map(c => serializer(schema(c).dataType))
+
+    /** Each column's wire bytes, in `cols` order. */
+    def fields(row: SpecializedGetters): Array[Array[Byte]] =
+      Array.tabulate(cols.length)(i => serializers(i)(row, cols(i)))
+
+    def encode(row: SpecializedGetters): Array[Byte] = frame(fields(row))
   }
 
   private val HexDigits = "0123456789ABCDEF".toCharArray

@@ -118,21 +118,10 @@ case class CqlSerializeExpr(child: Expression) extends UnaryExpression {
           s"cql_serialize does not support type $other (use sink-side codec for collections)")
     }
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) CqlValueCodec.Empty
-    else child.dataType match {
-      case StringType  => CqlValueCodec.serializeString(v.toString)
-      case IntegerType => CqlValueCodec.serializeInt(v.asInstanceOf[Int])
-      case LongType    => CqlValueCodec.serializeLong(v.asInstanceOf[Long])
-      case ShortType   => CqlValueCodec.serializeShort(v.asInstanceOf[Short])
-      case FloatType   => CqlValueCodec.serializeFloat(v.asInstanceOf[Float])
-      case DoubleType  => CqlValueCodec.serializeDouble(v.asInstanceOf[Double])
-      case BooleanType => CqlValueCodec.serializeBoolean(v.asInstanceOf[Boolean])
-      case BinaryType  => v.asInstanceOf[Array[Byte]]
-      case other       => throw new IllegalStateException(s"unreachable: $other")
-    }
-  }
+  @transient private lazy val serialize = CqlValueCodec.serializer(child.dataType)
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    serialize(new GenericInternalRow(Array[Any](child.eval(input))), 0)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val serCall: String => String = child.dataType match {

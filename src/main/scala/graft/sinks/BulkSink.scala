@@ -1,13 +1,18 @@
 package graft.sinks
 
+import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.Partitioner
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types._
+import scala.math.floorMod
+import scala.util.hashing.MurmurHash3
 
-import graft.core.{CassandraTokens, CqlValueCodec}
+import org.apache.spark.Partitioner
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
+
+import graft.core.{CassandraParams, CassandraTokens, CqlValueCodec}
 
 /**
  * Bulk-load sink, directory mode: the Spark rebuild of the reference's
@@ -25,6 +30,15 @@ import graft.core.{CassandraTokens, CqlValueCodec}
  * is append-only and streams row-at-a-time: no buffering of a partition in
  * memory, so a 100 TB load is bounded by disk, not heap. Speculative
  * execution must stay off (Spark default) so no partition is written twice.
+ *
+ * Why the CLI writes here and not through the DSv2 `graft-bulk` writer:
+ * only a custom [[Partitioner]] can route ring bucket b to a task of its
+ * own. Spark plans the DSv2 writer's `Distributions.clustered(_bucket)`
+ * as hash partitioning, pmod(murmur3(bucket, 42), n), which puts 16
+ * buckets on only 10 tasks (and 4 buckets on 2): 6 of the 10 runs would
+ * hold two buckets each, 5 of those pairs non-adjacent, and
+ * `LoaderPlan.planStreams` would stream each such run to the replicas of
+ * every range in between.
  */
 object BulkSink {
 
@@ -53,66 +67,78 @@ object BulkSink {
     perm
   }
 
-  /** Ring-bucket partitioner: bucket b -> partition perm(b) (bijective). */
-  final class RingPartitioner(n: Int, seed: Long = DefaultSlotSeed) extends Partitioner {
-    require(n > 0)
-    private val perm = slotPermutation(n, seed)
-    override def numPartitions: Int = n
-    override def getPartition(key: Any): Int = key match {
-      case (token: Long, _) => perm(CassandraTokens.bucketOfToken(token, n))
-      case token: Long      => perm(CassandraTokens.bucketOfToken(token, n))
-      case other            => throw new IllegalArgumentException(s"bad key: $other")
-    }
-  }
+  /** Shuffle key of one row: its partition-key bytes and token. Murmur3
+    * rows carry `token`; RandomPartitioner rows carry the canonical 16-byte
+    * md5 token in `md5Token` (null under Murmur3). */
+  private[graft] final case class DecoratedKey(token: Long, md5Token: Array[Byte],
+      pk: Array[Byte])
 
-  /** RandomPartitioner ring-bucket partitioner: keys carry canonical
-    * 16-byte md5 tokens; buckets are the reference's ceil(2^127/n) ranges
-    * (CassandraParams.java:297-316), permuted like the Murmur3 path. */
-  final class RandomRingPartitioner(n: Int, seed: Long = DefaultSlotSeed) extends Partitioner {
-    require(n > 0)
-    private val perm = slotPermutation(n, seed)
-    override def numPartitions: Int = n
-    override def getPartition(key: Any): Int = key match {
-      case (token: Array[Byte], _) => perm(CassandraTokens.randomBucketOfTokenBytes(token, n))
-      case other => throw new IllegalArgumentException(s"bad key: $other")
-    }
-  }
+  /** Decorated-key order (G3): token, then unsigned key bytes; md5 tokens
+    * compare unsigned-lexicographic, which is numeric token order. */
+  private implicit val decoratedOrder: Ordering[DecoratedKey] =
+    (a: DecoratedKey, b: DecoratedKey) =>
+      if (a.md5Token == null) CassandraTokens.compareDecorated(a.token, a.pk, b.token, b.pk)
+      else {
+        val c = CassandraTokens.compareUnsigned(a.md5Token, b.md5Token)
+        if (c != 0) c else CassandraTokens.compareUnsigned(a.pk, b.pk)
+      }
 
   /**
-   * `distributerandomly` partitioner: spreads rows over partitions with no
-   * correlation to ring position, the reference's load-balance escape hatch
-   * (CassandraPartitioner.java:58-60 assigns a random reducer). Crucially
-   * the reference KEEPS the within-reducer decorated-key sort — the sort
-   * comparator applies regardless of routing (CassandraParams.java:291-293)
-   * — so the output is still valid sorted runs, just not ring-aligned.
-   * The reference draws Random.nextInt per record, safe under MR because
-   * map output materializes exactly once; Spark recomputes map tasks on
-   * fetch failure, so the assignment must be a pure function of the key:
-   * a seeded hash of the partition-key bytes (uncorrelated with the
-   * Murmur3 ring token, which keys the sort, not the routing).
+   * The sink's one router. A row's BUCKET is its ring bucket — Murmur3
+   * ranges, or the reference's ceil(2^127/n) md5 ranges for
+   * RandomPartitioner keys (CassandraParams.java:297-316) — or, under
+   * `spread` (`distributerandomly`, CassandraPartitioner.java:58-60), a
+   * seeded hash of the partition-key bytes, uncorrelated with the ring.
+   * The reference draws Random.nextInt per record there, safe under MR
+   * because map output materializes once; Spark recomputes map tasks on
+   * fetch failure, so every routing decision here is a pure function of
+   * the key. Random routing keeps the within-task decorated-key sort
+   * (CassandraParams.java:291-293): its runs are valid, just not
+   * ring-aligned.
+   *
+   * SALTING: a bucket `b` in `salts` fans out over `salts(b)` sub-buckets
+   * by a second seeded pk hash (same pk, same sub-bucket, so a k-way merge
+   * never interleaves equal keys from two runs). SLOTS number the
+   * (bucket, sub) pairs bucket-major, and the seeded [[slotPermutation]]
+   * over all slots maps them onto shuffle partitions, so adjacent ranges
+   * and a hot range's sub-buckets spread across reducers alike.
    */
-  final class RandomSpreadPartitioner(n: Int) extends Partitioner {
+  private[graft] final class SlotRouter(n: Int, salts: Map[Int, Int] = Map.empty,
+      spread: Boolean = false) extends Partitioner {
     require(n > 0)
-    override def numPartitions: Int = n
-    override def getPartition(key: Any): Int = key match {
-      case (_, pk: Array[Byte]) =>
-        scala.math.floorMod(scala.util.hashing.MurmurHash3.bytesHash(pk, 0x5eed5107), n)
-      case other => throw new IllegalArgumentException(s"bad key: $other")
+    require(salts.forall { case (b, k) => b >= 0 && b < n && k >= 1 },
+      s"saltBuckets must map bucket in [0, $n) -> subBuckets >= 1: $salts")
+    private val kOf = Array.tabulate(n)(b => salts.getOrElse(b, 1))
+    private val offsets = kOf.scanLeft(0)(_ + _) // slot of (b, 0); length n+1
+    private val perm = slotPermutation(offsets(n))
+    private val slotOfPartition = {
+      val inv = new Array[Int](perm.length)
+      perm.zipWithIndex.foreach { case (p, s) => inv(p) = s }
+      inv
+    }
+    override def numPartitions: Int = offsets(n)
+
+    def bucketOf(k: DecoratedKey): Int =
+      if (spread) floorMod(MurmurHash3.bytesHash(k.pk, 0x5eed5107), n)
+      else if (k.md5Token != null) CassandraTokens.randomBucketOfTokenBytes(k.md5Token, n)
+      else CassandraTokens.bucketOfToken(k.token, n)
+
+    override def getPartition(key: Any): Int = {
+      val k = key.asInstanceOf[DecoratedKey]
+      val b = bucketOf(k)
+      val sub = if (kOf(b) == 1) 0 else floorMod(MurmurHash3.bytesHash(k.pk, 0x5a17ed), kOf(b))
+      perm(offsets(b) + sub)
+    }
+
+    def salted(bucket: Int): Boolean = kOf(bucket) > 1
+
+    /** The bucket whose rows (or one of whose sub-buckets) a shuffle
+      * partition holds. */
+    def bucketOfPartition(partition: Int): Int = {
+      val b = java.util.Arrays.binarySearch(offsets, slotOfPartition(partition))
+      if (b < 0) -b - 2 else b
     }
   }
-
-  /** Decorated-key order: token, then unsigned key bytes (G3 semantics). */
-  implicit val decoratedOrdering: Ordering[(Long, Array[Byte])] =
-    (a: (Long, Array[Byte]), b: (Long, Array[Byte])) =>
-      CassandraTokens.compareDecorated(a._1, a._2, b._1, b._2)
-
-  /** RandomPartitioner decorated-key order: 16-byte md5 token (unsigned
-    * lexicographic = numeric), then unsigned key bytes. */
-  val randomDecoratedOrdering: Ordering[(Array[Byte], Array[Byte])] =
-    (a: (Array[Byte], Array[Byte]), b: (Array[Byte], Array[Byte])) => {
-      val c = CassandraTokens.compareUnsigned(a._1, b._1)
-      if (c != 0) c else CassandraTokens.compareUnsigned(a._2, b._2)
-    }
 
   /** `bytes` is the LOGICAL record-stream size (what a re-parse yields);
     * `physicalBytes` is the on-disk size (what a transfer costs) — they
@@ -134,128 +160,27 @@ object BulkSink {
       chunks: Int = -1)
 
   /**
-   * Write `df` as sorted per-token-range runs under `outDir`.
-   * `keyCols` form the partition key (composite if 2+). Every column is
-   * serialized with the CQL wire codec. Returns per-partition manifests
-   * (also persisted as _MANIFEST.json).
+   * Write `df` as sorted per-token-range runs under `outDir`: one run per
+   * ring bucket, named and manifested by the bucket id. `keyCols` form the
+   * partition key (composite if 2+); every column is serialized with the
+   * CQL wire codec. Returns the manifests (also persisted as
+   * _MANIFEST.json). `distributeRandomly` changes ONLY the routing (see
+   * [[SlotRouter]]): its runs span the full token range, their manifests
+   * say so, and the stream plan fans them to all replicas.
    */
   def writeSorted(df: DataFrame, keyCols: Seq[String], numBuckets: Int,
       outDir: String, indexInterval: Int = 128,
-      partitionerClass: String = graft.core.CassandraParams.Murmur3Partitioner,
+      partitionerClass: String = CassandraParams.Murmur3Partitioner,
       compression: Option[String] = None,
       distributeRandomly: Boolean = false,
       chunkSize: Int = SortedRunWriter.DefaultChunkSize)
-      : Seq[PartitionManifest] = {
-    require(keyCols.nonEmpty)
-    // resolve the codec and validate the chunk size DRIVER-side so a bad
-    // option fails before the shuffle runs, not in task 0 of the write stage
-    val codec = compression.map(SortedRunWriter.normalizeCodec)
-    require(chunkSize >= 1024, s"chunkSize must be >= 1 KiB, got $chunkSize")
-    val isRandom = partitionerClass match {
-      case graft.core.CassandraParams.Murmur3Partitioner => false
-      case graft.core.CassandraParams.RandomPartitioner  => true
-      case other => throw new IllegalArgumentException(
-        s"unknown partitioner class: $other")
-    }
-    val schema = df.schema
-    val keyIdx = keyCols.map(schema.fieldIndex).toArray
-    val serializers: Array[Row => Array[Byte]] =
-      schema.fields.map(f => rowSerializer(f, schema.fieldIndex(f.name)))
-
-    Files.createDirectories(Paths.get(outDir))
-
-    // distributerandomly changes ONLY the routing; the shuffle still sorts
-    // every partition in decorated-key order, so both paths emit valid
-    // sorted runs — random ones just span the full token range (their
-    // manifests say so, and the stream plan fans them to all replicas)
-    val manifests: Seq[PartitionManifest] = if (isRandom) {
-      // RandomPartitioner (CassandraPartitioner.java:46-47,63-72): tokens
-      // are abs(md5(key)) carried as canonical 16-byte big-endian values,
-      // bucketed by ceil(2^127/n) ranges, sorted unsigned-lexicographic
-      // (= numeric md5 token order)
-      val keyed = df.rdd.map { row =>
-        val comps = keyIdx.map(i => serializers(i)(row))
-        val pk = if (comps.length == 1) comps(0) else CqlValueCodec.composite(comps)
-        ((CassandraTokens.md5TokenBytes(pk), pk), encodeRow(row, serializers))
-      }
-      val partitioner: Partitioner =
-        if (distributeRandomly) new RandomSpreadPartitioner(numBuckets)
-        else new RandomRingPartitioner(numBuckets)
-      // the ordered-RDD conversion needs the key Ordering implicitly
-      implicit val ord: Ordering[(Array[Byte], Array[Byte])] = randomDecoratedOrdering
-      val aligned = keyed.repartitionAndSortWithinPartitions(partitioner)
-      aligned.mapPartitionsWithIndex { (pid, it) =>
-        Iterator.single(writeRandomPartition(outDir, pid, it, codec, chunkSize))
-      }.collect().toSeq
-    } else {
-      val keyed = df.rdd.map { row =>
-        val comps = keyIdx.map(i => serializers(i)(row))
-        val pk = if (comps.length == 1) comps(0) else CqlValueCodec.composite(comps)
-        val token = CassandraTokens.token(pk)
-        val value = encodeRow(row, serializers)
-        ((token, pk), value)
-      }
-      val partitioner: Partitioner =
-        if (distributeRandomly) new RandomSpreadPartitioner(numBuckets)
-        else new RingPartitioner(numBuckets)
-      val aligned = keyed.repartitionAndSortWithinPartitions(partitioner)
-      aligned.mapPartitionsWithIndex { (pid, it) =>
-        Iterator.single(writePartition(outDir, pid, it, indexInterval, codec, chunkSize))
-      }.collect().toSeq
-    }
-
-    val json = manifests.map(manifestJson).mkString("[", ",", "]")
-    Files.write(Paths.get(outDir, "_MANIFEST.json"), json.getBytes(StandardCharsets.UTF_8))
-    manifests
-  }
-
-  /**
-   * Ring-bucket partitioner with per-bucket SALTING for hot token
-   * ranges: bucket `b` expands to `salts(b)` sub-buckets, rows route to
-   * a sub-bucket by a seeded hash of the PARTITION-KEY bytes (a pure
-   * function of the key — Spark may recompute map tasks on fetch
-   * failure, so per-record randomness would corrupt the shuffle; and
-   * same-pk rows stay in ONE sub-bucket, so the k-way merge never has
-   * to interleave equal keys from two runs and same-key rows remain
-   * contiguous, the newRow-on-key-change contract). The sub-bucket hash
-   * is Scala's Murmur3 x86 under its own seed — uncorrelated with the
-   * Cassandra x64_128 ring token that keys the SORT. The slot
-   * permutation applies over the TOTAL sub-bucket count, so a hot
-   * range's sub-buckets spread across reducers like adjacent ranges do.
-   *
-   * This is the answer SURVEY §7.4 risk 5 asks for: the reference's
-   * only hot-range escape (`distributerandomly`,
-   * CassandraPartitioner.java:58-60) forfeits ring alignment for EVERY
-   * range; salting splits only the hot ones and [[writeSortedSalted]]'s
-   * sink-side merge restores the one-sorted-run-per-range contract.
-   */
-  final class SaltedRingPartitioner(n: Int, salts: Map[Int, Int],
-      seed: Long = DefaultSlotSeed) extends Partitioner {
-    require(n > 0)
-    require(salts.forall { case (b, k) => b >= 0 && b < n && k >= 1 },
-      s"saltBuckets must map bucket in [0, $n) -> subBuckets >= 1: $salts")
-    private[sinks] val kOf = Array.tabulate(n)(b => salts.getOrElse(b, 1))
-    private[sinks] val offsets = kOf.scanLeft(0)(_ + _) // length n+1
-    /** Total shuffle partitions: n plus the extra sub-buckets. */
-    val total: Int = offsets(n)
-    private val perm = slotPermutation(total, seed)
-    override def numPartitions: Int = total
-    override def getPartition(key: Any): Int = key match {
-      case (token: Long, pk: Array[Byte]) =>
-        val b = CassandraTokens.bucketOfToken(token, n)
-        val k = kOf(b)
-        val sub =
-          if (k == 1) 0
-          else scala.math.floorMod(
-            scala.util.hashing.MurmurHash3.bytesHash(pk, 0x5a17ed), k)
-        perm(offsets(b) + sub)
-      case other => throw new IllegalArgumentException(s"bad key: $other")
-    }
-  }
+      : Seq[PartitionManifest] =
+    write(df, keyCols, numBuckets, outDir, Map.empty, indexInterval,
+      partitionerClass, compression, distributeRandomly, chunkSize)
 
   /** Test observability: per SALTED bucket, the phase-1 sub-run row
-    * counts of the last [[writeSortedSalted]] call — lets a spec pin
-    * that a planted hot range actually spread across its sub-buckets. */
+    * counts of the last salted write — lets a spec pin that a planted hot
+    * range actually spread across its sub-buckets. */
   @volatile private[graft] var lastSaltSubRows: Map[Int, Seq[Long]] = Map.empty
 
   /**
@@ -266,119 +191,132 @@ object BulkSink {
    * (CassandraPartitioner.java:57-72's one-range-one-reducer shape) —
    * and the sink then K-WAY MERGES each hot range's `k` sorted sub-runs
    * back into ONE globally decorated-key-sorted run, so the output
-   * layout is indistinguishable from an unsalted write: one sorted run
-   * per ring bucket, manifest `partition` = bucket id. Unsalted buckets
-   * write final-form runs in one pass (their files just move into
-   * place).
+   * layout is the unsalted write's: one sorted run per ring bucket.
    *
-   * Scale shape: the merge is one task per HOT range (a handful), each
-   * streaming `k` sorted runs through a k-element heap — sequential
-   * I/O, constant memory, no re-sort; the hot range's bytes are read
-   * once more than the unsalted path would, the price of removing the
-   * straggler reducer. Like the rest of this sink, `outDir` must be a
-   * filesystem every executor and the driver can reach.
+   * This is the answer SURVEY §7.4 risk 5 asks for: the reference's
+   * only hot-range escape (`distributerandomly`) forfeits ring alignment
+   * for EVERY range; salting splits only the hot ones.
    */
   def writeSortedSalted(df: DataFrame, keyCols: Seq[String],
       numBuckets: Int, outDir: String, saltBuckets: Map[Int, Int],
       indexInterval: Int = 128, compression: Option[String] = None,
       chunkSize: Int = SortedRunWriter.DefaultChunkSize)
-      : Seq[PartitionManifest] = {
+      : Seq[PartitionManifest] =
+    write(df, keyCols, numBuckets, outDir, saltBuckets, indexInterval,
+      CassandraParams.Murmur3Partitioner, compression, distributeRandomly = false,
+      chunkSize)
+
+  /** Salting splits RING buckets: it needs the Murmur3 ring and ring
+    * routing. Salting is the ring-preserving alternative to
+    * `distributerandomly`, so asking for both is refused loudly. */
+  def requireSaltable(partitionerClass: String, distributeRandomly: Boolean): Unit =
+    require(!distributeRandomly && partitionerClass == CassandraParams.Murmur3Partitioner,
+      "saltbuckets= needs the Murmur3 partitioner and no distributerandomly — " +
+        "salting IS the ring-preserving alternative to distributerandomly")
+
+  /**
+   * The one write body behind [[writeSorted]], [[writeSortedSalted]] and
+   * the CLI; an unsalted write is a salted write with no hot buckets.
+   * Rows leave the plan as Catalyst `InternalRow`s, are keyed by
+   * [[keying]], routed by [[SlotRouter]] and sorted in the shuffle
+   * (repartitionAndSortWithinPartitions: one exchange, Tungsten
+   * sort-spill), and every task appends its rows to one run with
+   * [[writeRun]]. An unsalted bucket's task writes its final-form run in
+   * place; a salted bucket's sub-runs are staged plain under `_salt-tmp`
+   * and [[mergeSubRuns]] merges them, one task per hot range — sequential
+   * reads through a k-element heap, constant memory, no re-sort. The
+   * staging dir is reclaimed on every exit, so a failed task or merge
+   * never strands a hot range's bytes. Like the rest of this sink,
+   * `outDir` must be a filesystem every executor and the driver can reach.
+   */
+  def write(df: DataFrame, keyCols: Seq[String], numBuckets: Int, outDir: String,
+      saltBuckets: Map[Int, Int], indexInterval: Int = 128,
+      partitionerClass: String = CassandraParams.Murmur3Partitioner,
+      compression: Option[String] = None, distributeRandomly: Boolean = false,
+      chunkSize: Int = SortedRunWriter.DefaultChunkSize): Seq[PartitionManifest] = {
     require(keyCols.nonEmpty)
+    // resolve the codec and validate the chunk size DRIVER-side so a bad
+    // option fails before the shuffle runs, not in task 0 of the write stage
     val codec = compression.map(SortedRunWriter.normalizeCodec)
     require(chunkSize >= 1024, s"chunkSize must be >= 1 KiB, got $chunkSize")
-    val schema = df.schema
-    val keyIdx = keyCols.map(schema.fieldIndex).toArray
-    val serializers: Array[Row => Array[Byte]] =
-      schema.fields.map(f => rowSerializer(f, schema.fieldIndex(f.name)))
-    Files.createDirectories(Paths.get(outDir))
-    val tmpPath = new java.io.File(outDir, "_salt-tmp").getAbsolutePath
-    Files.createDirectories(Paths.get(tmpPath))
-
-    val partitioner = new SaltedRingPartitioner(numBuckets, saltBuckets)
-    val kOf = partitioner.kOf
-    val offsets = partitioner.offsets
-    // a task derives which (bucket, sub) it owns by inverting the slot
-    // permutation (same seed -> same bijection, no config channel)
-    val perm = slotPermutation(partitioner.total)
-    val inv = new Array[Int](perm.length)
-    perm.zipWithIndex.foreach { case (p, s) => inv(p) = s }
-
-    val keyed = df.rdd.map { row =>
-      val comps = keyIdx.map(i => serializers(i)(row))
-      val pk = if (comps.length == 1) comps(0) else CqlValueCodec.composite(comps)
-      ((CassandraTokens.token(pk), pk), encodeRow(row, serializers))
+    val random = partitionerClass match {
+      case CassandraParams.Murmur3Partitioner => false
+      case CassandraParams.RandomPartitioner  => true
+      case other => throw new IllegalArgumentException(
+        s"unknown partitioner class: $other")
     }
-    val aligned = keyed.repartitionAndSortWithinPartitions(partitioner)
-    // staging is reclaimed on EVERY exit: a failed phase-1 task or merge
-    // must not strand a hot range's worth of sub-run bytes under the
-    // output dir across retries
-    def rmTree(f: java.io.File): Unit = {
+    if (saltBuckets.nonEmpty) requireSaltable(partitionerClass, distributeRandomly)
+    val router = new SlotRouter(numBuckets, saltBuckets, distributeRandomly)
+    val keyOf = keying(df.schema, keyCols, random)
+
+    Files.createDirectories(Paths.get(outDir))
+    val stage = new File(outDir, "_salt-tmp").getAbsolutePath
+    if (saltBuckets.nonEmpty) Files.createDirectories(Paths.get(stage))
+    def rmTree(f: File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rmTree))
       f.delete(); ()
     }
     try {
-      // phase 1: every shuffle partition writes a sorted run into the
-      // staging dir — unsalted buckets final-form (index + codec, they
-      // only need a rename), salted sub-runs plain (the merge re-reads
-      // them anyway and re-encodes once, in the final writer)
-      val phase1: Seq[(Int, Int, PartitionManifest)] =
-        aligned.mapPartitionsWithIndex { (pid, it) =>
-          val sub = inv(pid)
-          var b = java.util.Arrays.binarySearch(offsets, sub)
-          if (b < 0) b = -b - 2
-          val m =
-            if (kOf(b) == 1)
-              writePartition(tmpPath, pid, it, indexInterval, codec, chunkSize)
-            else
-              writePartition(tmpPath, pid, it, indexInterval, None, chunkSize)
-          Iterator.single((b, sub - offsets(b), m))
+      val runs: Seq[(Int, PartitionManifest)] = df.queryExecution.toRdd
+        .map(keyOf).repartitionAndSortWithinPartitions(router)
+        .mapPartitionsWithIndex { (pid, it) =>
+          val b = router.bucketOfPartition(pid)
+          Iterator.single(b -> (
+            if (router.salted(b)) writeRun(stage, pid, it, indexInterval, None, chunkSize, random)
+            else writeRun(outDir, b, it, indexInterval, codec, chunkSize, random)))
         }.collect().toSeq
 
-      val byBucket = phase1.groupBy(_._1)
-      val out = scala.collection.mutable.ArrayBuffer.empty[PartitionManifest]
-      // unsalted buckets: rename the final-form files into place under the
-      // bucket's pid (driver-side, #buckets renames, no data read)
-      byBucket.toSeq.filter { case (b, _) => kOf(b) == 1 }.foreach {
-        case (b, group) =>
-          val m = group.head._3
-          def mv(name: String, newName: String): String = {
-            Files.move(Paths.get(tmpPath, name), Paths.get(outDir, newName))
-            newName
-          }
-          val data = mv(m.dataFile, f"graft-$b%05d-Data.db")
-          val idx =
-            if (m.indexFile.isEmpty) ""
-            else mv(m.indexFile, f"graft-$b%05d-Index.db")
-          if (m.chunks > 0)
-            mv(m.dataFile.replace("-Data.db", "-Chunks.db"),
-              f"graft-$b%05d-Chunks.db")
-          out += m.copy(partition = b, dataFile = data, indexFile = idx)
+      val (salted, plain) = runs.partition(r => router.salted(r._1))
+      val subRuns = salted.groupBy(_._1).toSeq.map { case (b, group) =>
+        (b, group.map(_._2).sortBy(_.partition))
       }
-      // salted buckets: one merge task per hot range, distributed; each
-      // merge must reproduce its phase-1 row total exactly
-      val saltedGroups = byBucket.toSeq.collect {
-        case (b, group) if kOf(b) > 1 =>
-          (b, group.sortBy(_._2).map(_._3.dataFile),
-            group.map(_._3.rows).sum)
-      }
-      lastSaltSubRows = byBucket.collect {
-        case (b, group) if kOf(b) > 1 =>
-          b -> group.sortBy(_._2).map(_._3.rows)
-      }.toMap
-      if (saltedGroups.nonEmpty) {
-        val sc = df.sparkSession.sparkContext
-        out ++= sc.parallelize(saltedGroups, saltedGroups.size).map {
-          case (b, dataFiles, expRows) =>
-            mergeSubRuns(tmpPath, outDir, b, dataFiles, expRows,
-              indexInterval, codec, chunkSize)
-        }.collect()
-      }
-      val manifests = out.sortBy(_.partition).toSeq
+      lastSaltSubRows = subRuns.map { case (b, ms) => b -> ms.map(_.rows) }.toMap
+      // each merge must reproduce its phase-1 row total exactly
+      val merged =
+        if (subRuns.isEmpty) Nil
+        else df.sparkSession.sparkContext.parallelize(subRuns, subRuns.size).map {
+          case (b, ms) => mergeSubRuns(stage, outDir, b, ms.map(_.dataFile),
+            ms.map(_.rows).sum, indexInterval, codec, chunkSize)
+        }.collect().toSeq
+      val manifests = (plain.map(_._2) ++ merged).sortBy(_.partition)
       val json = manifests.map(manifestJson).mkString("[", ",", "]")
-      Files.write(Paths.get(outDir, "_MANIFEST.json"),
-        json.getBytes(StandardCharsets.UTF_8))
+      Files.write(Paths.get(outDir, "_MANIFEST.json"), json.getBytes(StandardCharsets.UTF_8))
       manifests
-    } finally rmTree(new java.io.File(tmpPath))
+    } finally if (saltBuckets.nonEmpty) rmTree(new File(stage))
+  }
+
+  /** The one row -> (decorated key, value payload) function: the partition
+    * key is the `keyCols` bytes (composite if 2+), the token is the
+    * partitioner's, and the value frames every column. */
+  private def keying(schema: StructType, keyCols: Seq[String],
+      random: Boolean): InternalRow => (DecoratedKey, Array[Byte]) = {
+    val codec = new CqlValueCodec.RowCodec(schema, schema.indices.toArray)
+    val keyIdx = keyCols.map(schema.fieldIndex).toArray
+    row => {
+      val parts = codec.fields(row)
+      val pk = CqlValueCodec.partitionKey(parts, keyIdx)
+      val key =
+        if (random) DecoratedKey(0L, CassandraTokens.md5TokenBytes(pk), pk)
+        else DecoratedKey(CassandraTokens.token(pk), null, pk)
+      (key, CqlValueCodec.frame(parts))
+    }
+  }
+
+  /** The one per-task run writer: appends decorated-key-sorted rows to run
+    * `name` under `dir`. The writer enforces the sorted-input contract
+    * (the .sorted() writer requirement — the reference's
+    * newRow-on-key-change would corrupt on unsorted input). */
+  private def writeRun(dir: String, name: Int, it: Iterator[(DecoratedKey, Array[Byte])],
+      indexInterval: Int, codec: Option[String], chunkSize: Int,
+      random: Boolean): PartitionManifest = {
+    val writer = new SortedRunWriter(dir, name, indexInterval, codec,
+      randomTokens = random, chunkSize = chunkSize)
+    try {
+      it.foreach { case (k, v) =>
+        if (random) writer.addRandom(k.md5Token, k.pk, v) else writer.add(k.token, k.pk, v)
+      }
+      writer.close()
+    } catch { case e: Throwable => writer.abort(); throw e }
   }
 
   /** Streaming cursor over one sub-run's record frames (2-byte key len +
@@ -474,18 +412,12 @@ object BulkSink {
       sampleFraction: Double = 0.01, hotFactor: Double = 2.0,
       maxSalt: Int = 16): Map[Int, Int] = {
     require(keyCols.nonEmpty)
-    val schema = df.schema
-    val keyIdx = keyCols.map(schema.fieldIndex).toArray
-    val serializers: Array[Row => Array[Byte]] =
-      schema.fields.map(f => rowSerializer(f, schema.fieldIndex(f.name)))
+    val keyOf = keying(df.schema, keyCols, random = false)
+    val router = new SlotRouter(numBuckets)
     val counts = df.sample(withReplacement = false, sampleFraction,
         seed = DefaultSlotSeed)
-      .rdd.map { row =>
-        val comps = keyIdx.map(i => serializers(i)(row))
-        val pk = if (comps.length == 1) comps(0)
-          else CqlValueCodec.composite(comps)
-        CassandraTokens.bucketOfToken(CassandraTokens.token(pk), numBuckets)
-      }.countByValue()
+      .queryExecution.toRdd.map(row => router.bucketOf(keyOf(row)._1))
+      .countByValue()
     val totalN = counts.values.sum.toDouble
     if (totalN == 0) return Map.empty
     val mean = totalN / numBuckets
@@ -534,107 +466,4 @@ object BulkSink {
       }.toSeq
     }
   }
-
-  /** Append-only sorted-run writer; enforces the sorted-input contract
-    * (the .sorted() writer requirement — the reference's newRow-on-key-
-    * change would corrupt on unsorted input). */
-  private def writePartition(outDir: String, pid: Int,
-      it: Iterator[((Long, Array[Byte]), Array[Byte])],
-      indexInterval: Int, codec: Option[String],
-      chunkSize: Int = SortedRunWriter.DefaultChunkSize): PartitionManifest = {
-    val writer = new SortedRunWriter(outDir, pid, indexInterval, codec,
-      chunkSize = chunkSize)
-    try {
-      while (it.hasNext) {
-        val ((token, key), value) = it.next()
-        writer.add(token, key, value)
-      }
-      writer.close()
-    } catch { case e: Throwable => writer.abort(); throw e }
-  }
-
-  /** RandomPartitioner variant: keys arrive as canonical md5 token bytes. */
-  private def writeRandomPartition(outDir: String, pid: Int,
-      it: Iterator[((Array[Byte], Array[Byte]), Array[Byte])],
-      codec: Option[String],
-      chunkSize: Int = SortedRunWriter.DefaultChunkSize): PartitionManifest = {
-    val writer = new SortedRunWriter(outDir, pid, compression = codec,
-      randomTokens = true, chunkSize = chunkSize)
-    try {
-      while (it.hasNext) {
-        val ((token, key), value) = it.next()
-        writer.addRandom(token, key, value)
-      }
-      writer.close()
-    } catch { case e: Throwable => writer.abort(); throw e }
-  }
-
-  /** Length-prefixed concatenation of all serialized column values. */
-  private def encodeRow(row: Row, serializers: Array[Row => Array[Byte]]): Array[Byte] = {
-    var total = 0
-    val parts = new Array[Array[Byte]](serializers.length)
-    var i = 0
-    while (i < serializers.length) {
-      parts(i) = serializers(i)(row)
-      total += 4 + parts(i).length
-      i += 1
-    }
-    val bb = java.nio.ByteBuffer.allocate(total)
-    i = 0
-    while (i < serializers.length) {
-      bb.putInt(parts(i).length); bb.put(parts(i)); i += 1
-    }
-    bb.array()
-  }
-
-  /** Per-field wire serializer (F1/F2 semantics, null -> empty buffer). */
-  private def rowSerializer(f: StructField, i: Int): Row => Array[Byte] = f.dataType match {
-    case StringType  => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeString(r.getString(i))
-    case LongType    => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeLong(r.getLong(i))
-    case IntegerType => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeInt(r.getInt(i))
-    case ShortType   => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeShort(r.getShort(i))
-    case DoubleType  => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeDouble(r.getDouble(i))
-    case FloatType   => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeFloat(r.getFloat(i))
-    case BooleanType => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeBoolean(r.getBoolean(i))
-    case BinaryType  => r => if (r.isNullAt(i)) CqlValueCodec.Empty else r.getAs[Array[Byte]](i)
-    case TimestampType => r => if (r.isNullAt(i)) CqlValueCodec.Empty
-      else CqlValueCodec.serializeLong(r.getAs[java.sql.Timestamp](i).getTime)
-    case TimestampNTZType => r => if (r.isNullAt(i)) CqlValueCodec.Empty
-      else CqlValueCodec.serializeLong(
-        r.getAs[java.time.LocalDateTime](i).toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
-    case DateType => r => if (r.isNullAt(i)) CqlValueCodec.Empty
-      else CqlValueCodec.serializeInt(r.getAs[java.sql.Date](i).toLocalDate.toEpochDay.toInt)
-    case _: DecimalType => r => if (r.isNullAt(i)) CqlValueCodec.Empty
-      else CqlValueCodec.serializeDecimal(r.getAs[java.math.BigDecimal](i))
-    case ArrayType(el, _) => r => if (r.isNullAt(i)) CqlValueCodec.Empty else {
-      val seq = r.getSeq[Any](i)
-      CqlValueCodec.serializeCollection(seq.map(serializeAny(el, _)))
-    }
-    case MapType(kt, vt, _) => r => if (r.isNullAt(i)) CqlValueCodec.Empty else {
-      val m = r.getMap[Any, Any](i)
-      CqlValueCodec.serializeMap(m.toSeq.map { case (k, v) =>
-        (serializeAny(kt, k), serializeAny(vt, v)) })
-    }
-    case st: StructType => r => if (r.isNullAt(i)) CqlValueCodec.Empty else {
-      val nested = r.getStruct(i)
-      CqlValueCodec.composite(st.fields.zipWithIndex.map { case (nf, ni) =>
-        if (nested.isNullAt(ni)) CqlValueCodec.Empty else serializeAny(nf.dataType, nested.get(ni))
-      })
-    }
-    case other => throw new IllegalArgumentException(
-      s"cannot serialize column ${f.name} of type $other to Cassandra wire bytes")
-  }
-
-  private def serializeAny(dt: DataType, v: Any): Array[Byte] =
-    if (v == null) CqlValueCodec.Empty
-    else dt match {
-      case StringType  => CqlValueCodec.serializeString(v.toString)
-      case LongType    => CqlValueCodec.serializeLong(v.asInstanceOf[Long])
-      case IntegerType => CqlValueCodec.serializeInt(v.asInstanceOf[Int])
-      case DoubleType  => CqlValueCodec.serializeDouble(v.asInstanceOf[Double])
-      case FloatType   => CqlValueCodec.serializeFloat(v.asInstanceOf[Float])
-      case BooleanType => CqlValueCodec.serializeBoolean(v.asInstanceOf[Boolean])
-      case BinaryType  => v.asInstanceOf[Array[Byte]]
-      case other => throw new IllegalArgumentException(s"collection element type $other unsupported")
-    }
 }

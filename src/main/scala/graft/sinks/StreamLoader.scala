@@ -391,8 +391,8 @@ final class InProcessCluster(hosts: Seq[String],
 }
 
 object InProcessCluster {
-  /** Persist the plan next to the manifests (the `_STREAM_PLAN.json`
-    * contract the CLI writes; here for loader-side reuse). */
+  /** Persist the plan next to the manifests as `_STREAM_PLAN.json`, one
+    * entry per run sorted by file name (the CLI writes it through here). */
   def writePlanJson(outDir: String, plan: Map[String, Set[String]]): Unit = {
     val json = plan.toSeq.sortBy(_._1).map { case (f, hosts) =>
       s""""$f": [${hosts.toSeq.sorted.map(h => s""""$h"""").mkString(", ")}]"""

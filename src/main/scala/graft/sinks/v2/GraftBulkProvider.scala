@@ -37,14 +37,16 @@ import graft.sinks.{BulkSink, SortedRunWriter}
  * Speculative-execution double-writes are prevented by the commit
  * coordinator (useCommitCoordinator default true).
  *
- * HOT RINGS: this writer clusters one ring bucket per task, so a hot
- * token range is one straggler task (the reference's
- * one-range-one-reducer shape). For skewed rings use
- * [[graft.sinks.BulkSink.writeSortedSalted]] instead — it splits hot
- * buckets across salted sub-buckets and k-way-merges them back to one
- * sorted run per range, producing the SAME layout this sink's read
- * path consumes ([[graft.sinks.BulkSink.planSalts]] detects the hot
- * buckets from a sample).
+ * RING ALIGNMENT: Spark plans `Distributions.clustered(_bucket)` as hash
+ * partitioning, pmod(murmur3(bucket, 42), n), so a task can hold several
+ * non-adjacent ring buckets (16 buckets land on only 10 tasks) and its
+ * run then spans every range in between. Runs stay valid — overlapping
+ * ranges are a legal state of the format — but the stream plan fans such
+ * a run to extra replicas. The CLI therefore writes through
+ * [[graft.sinks.BulkSink]], whose RDD shuffle routes bucket b to its own
+ * task and splits hot ranges by salting
+ * ([[graft.sinks.BulkSink.writeSortedSalted]]). Both sinks encode rows
+ * with the same [[graft.core.CqlValueCodec.RowCodec]].
  */
 class GraftBulkProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-bulk"
@@ -225,7 +227,8 @@ final class GraftBulkWriterFactory(path: String, schema: StructType,
 /**
  * Per-task sorted-run writer over InternalRow (no Row conversion — reads
  * Tungsten values directly). Aux columns (_pk/_token/_bucket) route; all
- * other columns serialize into the value payload with the CQL wire codec.
+ * other columns serialize into the value payload with the CQL wire codec
+ * the RDD sink uses too ([[graft.core.CqlValueCodec.RowCodec]]).
  *
  * The `_token` column's TYPE selects the partitioner (the reference loads
  * the partitioner reflectively and handles both LongToken and
@@ -242,8 +245,8 @@ final class GraftBulkDataWriter(path: String, pid: Int, schema: StructType,
   private val pkIdx = schema.fieldIndex("_pk")
   private val tokenIdx = schema.fieldIndex("_token")
   private val aux = Set(pkIdx, tokenIdx, schema.fieldIndex("_bucket"))
-  private val valueFields: Array[(Int, DataType)] = schema.fields.zipWithIndex
-    .collect { case (f, i) if !aux.contains(i) => (i, f.dataType) }
+  private val valueIdx: Array[Int] = schema.indices.filterNot(aux).toArray
+  private val valueCodec = new CqlValueCodec.RowCodec(schema, valueIdx)
 
   private val randomTokens = schema.fields(tokenIdx).dataType match {
     case LongType   => false
@@ -259,43 +262,11 @@ final class GraftBulkDataWriter(path: String, pid: Int, schema: StructType,
     val pk = row.getBinary(pkIdx)
     val value =
       if (rawPayload) {
-        val i = valueFields(0)._1
+        val i = valueIdx(0)
         if (row.isNullAt(i)) Array.emptyByteArray else row.getBinary(i)
-      } else encodeValues(row)
+      } else valueCodec.encode(row)
     if (randomTokens) writer.addRandom(row.getBinary(tokenIdx), pk, value)
     else writer.add(row.getLong(tokenIdx), pk, value)
-  }
-
-  private def encodeValues(row: InternalRow): Array[Byte] = {
-    val parts = new Array[Array[Byte]](valueFields.length)
-    var total = 0
-    var i = 0
-    while (i < valueFields.length) {
-      val (idx, dt) = valueFields(i)
-      parts(i) = if (row.isNullAt(idx)) CqlValueCodec.Empty else serialize(row, idx, dt)
-      total += 4 + parts(i).length
-      i += 1
-    }
-    val bb = java.nio.ByteBuffer.allocate(total)
-    i = 0
-    while (i < valueFields.length) { bb.putInt(parts(i).length); bb.put(parts(i)); i += 1 }
-    bb.array()
-  }
-
-  private def serialize(row: InternalRow, i: Int, dt: DataType): Array[Byte] = dt match {
-    case StringType    => CqlValueCodec.serializeString(row.getUTF8String(i).toString)
-    case LongType      => CqlValueCodec.serializeLong(row.getLong(i))
-    case IntegerType   => CqlValueCodec.serializeInt(row.getInt(i))
-    case ShortType     => CqlValueCodec.serializeShort(row.getShort(i))
-    case DoubleType    => CqlValueCodec.serializeDouble(row.getDouble(i))
-    case FloatType     => CqlValueCodec.serializeFloat(row.getFloat(i))
-    case BooleanType   => CqlValueCodec.serializeBoolean(row.getBoolean(i))
-    case BinaryType    => row.getBinary(i)
-    case TimestampType | TimestampNTZType =>
-      CqlValueCodec.serializeLong(row.getLong(i) / 1000L) // micros -> millis
-    case DateType      => CqlValueCodec.serializeInt(row.getInt(i))
-    case other => throw new IllegalArgumentException(
-      s"graft-bulk cannot serialize type $other (pre-serialize to binary)")
   }
 
   override def commit(): WriterCommitMessage = {

@@ -131,13 +131,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(manifests.length === 4)
     assert(manifests.map(_.rows).sum === orders.count())
     assert(manifests.forall(_.sorted))
-    // ring alignment: each partition holds exactly one ring bucket, mapped
-    // through the seeded slot permutation (bucket b -> partition perm(b))
-    val perm = BulkSink.slotPermutation(4)
+    // ring alignment: each run holds exactly one ring bucket and is
+    // manifested by its bucket id
     manifests.filter(_.rows > 0).foreach { m =>
       val bucket = CassandraTokens.bucketOfToken(m.minToken, 4)
       assert(CassandraTokens.bucketOfToken(m.maxToken, 4) === bucket)
-      assert(perm(bucket) === m.partition)
+      assert(bucket === m.partition)
     }
     assert(new java.io.File(dir, "_MANIFEST.json").exists())
     // data files parse back: short keylen + key + int vallen + val
@@ -229,8 +228,7 @@ class PipelineSpec extends AnyFunSuite {
     // the sorted-run contract survived the salt+merge round trip
     val dir2 = java.nio.file.Files.createTempDirectory("graft-salt0").toString
     val plain = BulkSink.writeSorted(df, Seq("rowkey"), numBuckets, dir2)
-    val perm = BulkSink.slotPermutation(numBuckets)
-    val plainHot = plain.find(_.partition == perm(hotBucket)).get
+    val plainHot = plain.find(_.partition == hotBucket).get
     assert(plainHot.rows === hot.rows && plainHot.bytes === hot.bytes)
     val a = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, hot.dataFile))
@@ -406,9 +404,8 @@ class PipelineSpec extends AnyFunSuite {
     ).toDF("rowkey", "value")
     val manifests = BulkSink.writeSorted(df, Seq("rowkey"), 4, dir)
     assert(manifests.map(_.rows).sum === 4)
-    // empty/null keys land in bucket 0 (token = Long.MinValue), which the
-    // slot permutation routes to partition perm(0)
-    val p0 = manifests.find(_.partition == BulkSink.slotPermutation(4)(0)).get
+    // empty/null keys land in bucket 0 (token = Long.MinValue)
+    val p0 = manifests.find(_.partition == 0).get
     assert(p0.rows >= 2 && p0.minToken === Long.MinValue)
   }
 

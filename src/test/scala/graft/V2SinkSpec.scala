@@ -933,4 +933,72 @@ class V2SinkSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("_pk") || e.getCause != null)
   }
+
+  test("both bulk sinks encode every supported type to the same value bytes") {
+    // pre-epoch sub-millisecond instants are where micros -> millis
+    // truncation and flooring disagree (-1 us must be -1 ms, not 0 ms)
+    val micros = Seq(-1L, -999L, -1000L, -1001L, -1500L, 0L, 1499L, -86400000001L)
+    val base = (micros.zipWithIndex.map { case (m, n) => (n.toLong, Option(m)) } :+
+      ((micros.length.toLong, None: Option[Long]))).toDF("n", "us")
+    val nul = "us IS NULL" // the last row is null in every value column
+    val df = base.selectExpr(
+      "concat('k', n) AS id",
+      s"IF($nul, NULL, concat('s-', n, '-ключ')) AS s",
+      s"IF($nul, NULL, CAST(n * 7 - 3 AS INT)) AS i",
+      "us AS l",
+      s"IF($nul, NULL, CAST(n - 2 AS SMALLINT)) AS sh",
+      s"IF($nul, NULL, CAST(n / 3 AS FLOAT)) AS f",
+      s"IF($nul, NULL, CAST(n / 7 AS DOUBLE)) AS d",
+      s"IF($nul, NULL, n % 2 = 0) AS b",
+      s"IF($nul, NULL, CAST(concat('bin', n) AS BINARY)) AS bin",
+      "date_from_unix_date(CAST(floor(us / 1000) AS INT)) AS dt",
+      "timestamp_micros(us) AS ts",
+      "CAST(timestamp_micros(us) AS TIMESTAMP_NTZ) AS ntz",
+      "CAST(us / 1000 AS DECIMAL(12, 3)) AS dec",
+      s"IF($nul, NULL, array(concat('a', n), NULL, 'z')) AS arr",
+      s"IF($nul, NULL, map('x', CAST(n AS INT), 'y', NULL)) AS m",
+      s"IF($nul, NULL, named_struct('a', CAST(n AS INT), 'b', IF(n % 2 = 0, NULL, 'odd'))) AS st")
+    assert(df.schema.map(_.dataType.typeName).toSet === Set("string", "integer", "long",
+      "short", "float", "double", "boolean", "binary", "date", "timestamp",
+      "timestamp_ntz", "decimal(12,3)", "array", "map", "struct"))
+
+    def valuesByPk(dir: String): Map[String, Seq[Byte]] =
+      new java.io.File(dir).listFiles().filter(_.getName.endsWith("-Data.db")).toSeq
+        .flatMap { f =>
+          val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+            new java.io.FileInputStream(f)))
+          try Iterator.continually(in.available() > 0).takeWhile(identity).map { _ =>
+            val key = new Array[Byte](in.readUnsignedShort()); in.readFully(key)
+            val value = new Array[Byte](in.readInt()); in.readFully(value)
+            new String(key, "UTF-8") -> value.toSeq
+          }.toList
+          finally in.close()
+        }.toMap
+
+    val rddDir = Files.createTempDirectory("graft-codec-rdd").toString
+    graft.sinks.BulkSink.writeSorted(df, Seq("id"), 4, rddDir)
+    val v2Dir = Files.createTempDirectory("graft-codec-v2").toString
+    df.withColumn("_pk", partition_key(col("id")))
+      .withColumn("_token", cassandra_token(col("_pk")))
+      .withColumn("_bucket", token_bucket(col("_token"), 4))
+      .write.format("graft-bulk").option("path", v2Dir).option("buckets", "4")
+      .mode("append").save()
+
+    val rdd = valuesByPk(rddDir)
+    val v2 = valuesByPk(v2Dir)
+    assert(rdd.size === micros.length + 1)
+    assert(v2.keySet === rdd.keySet)
+    rdd.foreach { case (pk, value) =>
+      assert(v2(pk) === value, s"value bytes of $pk differ between the sinks")
+    }
+    // and the shared encoding floors: field `ts` of the -1 us row is -1 ms
+    def field(value: Seq[Byte], idx: Int): Seq[Byte] = {
+      val bb = java.nio.ByteBuffer.wrap(value.toArray)
+      (0 until idx).foreach(_ => bb.position(bb.position() + 4 + bb.getInt(bb.position())))
+      val out = new Array[Byte](bb.getInt()); bb.get(out); out.toSeq
+    }
+    val minusOneMs = graft.core.CqlValueCodec.serializeLong(-1L).toSeq
+    assert(field(rdd("k0"), df.schema.fieldIndex("ts")) === minusOneMs)
+    assert(field(rdd("k0"), df.schema.fieldIndex("ntz")) === minusOneMs)
+  }
 }

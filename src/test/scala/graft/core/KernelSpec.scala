@@ -268,19 +268,23 @@ class KernelSpec extends AnyFunSuite {
     assert(perm.toSeq !== (0 until n).toSeq)
   }
 
-  test("RandomSpreadPartitioner balances, ignores the token, stays deterministic") {
+  test("SlotRouter spread mode balances, ignores the token, stays deterministic") {
     import graft.sinks.BulkSink
-    val p = new BulkSink.RandomSpreadPartitioner(16)
+    import graft.sinks.BulkSink.DecoratedKey
+    val p = new BulkSink.SlotRouter(16, spread = true)
     val counts = new Array[Int](16)
     (0 until 16000).foreach { i =>
-      counts(p.getPartition((0L, s"key-$i".getBytes("UTF-8")))) += 1
+      counts(p.getPartition(DecoratedKey(0L, null, s"key-$i".getBytes("UTF-8")))) += 1
     }
     // hash spread: every partition near 1000 ± 30%
     assert(counts.min > 700 && counts.max < 1300, counts.mkString(","))
     // pure function of the KEY (shuffle-retry safety) — the token must not
     // matter, because the ring position is exactly what random routing drops
     val k = "key-7".getBytes("UTF-8")
-    assert(p.getPartition((123L, k)) === p.getPartition((-456L, k)))
+    assert(p.getPartition(DecoratedKey(123L, null, k)) ===
+      p.getPartition(DecoratedKey(-456L, null, k)))
+    assert(p.getPartition(DecoratedKey(0L, null, k)) ===
+      p.getPartition(DecoratedKey(0L, null, k.clone())))
   }
 
   // --- Params ---------------------------------------------------------------
@@ -324,35 +328,39 @@ class KernelSpec extends AnyFunSuite {
     assert(eDup.getMessage.contains("more than once"), eDup.getMessage)
   }
 
-  test("SaltedRingPartitioner: same pk same partition, sub-slots stay inside the bucket") {
+  test("SlotRouter salting: same pk same partition, sub-slots stay inside the bucket") {
     import graft.sinks.BulkSink
+    import graft.sinks.BulkSink.DecoratedKey
     val n = 8
     val salts = Map(2 -> 4, 5 -> 3)
-    val p = new BulkSink.SaltedRingPartitioner(n, salts)
-    assert(p.total === n + 3 + 2)
+    val p = new BulkSink.SlotRouter(n, salts)
+    assert(p.numPartitions === n + 3 + 2)
     // invert the permutation to recover each partition's (bucket, sub)
     val kOf = Array.tabulate(n)(b => salts.getOrElse(b, 1))
     val offsets = kOf.scanLeft(0)(_ + _)
-    val perm = BulkSink.slotPermutation(p.total)
+    val perm = BulkSink.slotPermutation(p.numPartitions)
     val inv = new Array[Int](perm.length)
     perm.zipWithIndex.foreach { case (q, s) => inv(q) = s }
     (0 until 5000).foreach { i =>
       val pk = s"key-$i".getBytes("UTF-8")
       val tok = CassandraTokens.token(pk)
       val b = CassandraTokens.bucketOfToken(tok, n)
-      val part = p.getPartition((tok, pk))
+      val part = p.getPartition(DecoratedKey(tok, null, pk))
       // routing is a pure function of the key (shuffle-retry safety)
-      assert(part === p.getPartition((tok, pk)))
+      assert(part === p.getPartition(DecoratedKey(tok, null, pk.clone())))
       // and the sub-slot belongs to the key's ring bucket
       val sub = inv(part)
       assert(sub >= offsets(b) && sub < offsets(b + 1),
         s"key $i routed outside its ring bucket")
+      // the router's own inverse (what a write task uses to name its run)
+      // agrees with the independent one
+      assert(p.bucketOfPartition(part) === b)
     }
     // every sub-slot of a salted bucket receives SOME keys (balance is
     // pinned end-to-end in PipelineSpec; here just non-degeneracy)
     val hits = (0 until 20000).map { i =>
       val pk = s"k$i".getBytes("UTF-8")
-      inv(p.getPartition((CassandraTokens.token(pk), pk)))
+      inv(p.getPartition(DecoratedKey(CassandraTokens.token(pk), null, pk)))
     }.toSet
     assert((offsets(2) until offsets(3)).forall(hits.contains),
       "a salted sub-bucket never received a key")
